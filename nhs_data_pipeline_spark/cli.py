@@ -10,6 +10,9 @@ written as single CSVs (reference-format parity) or parquet.
 from __future__ import annotations
 
 import argparse
+import csv
+import glob
+import os
 import sys
 
 from pyspark.sql import functions as F
@@ -77,19 +80,32 @@ def build_supporting_facilities(args: argparse.Namespace) -> None:
     adjusted = adjust_supporting_facilities(clean_indexed, lookup)
 
     if args.format == "csv":
-        write_single_csv(
+        out = write_single_csv(
             adjusted,
             f"{args.out}/supporting-facilities_clean_org_change_adj.csv",
             order_by=["org_code", "year", "quarter"],
             null_value="NA",  # R write.csv NA rendering
         )
     else:
-        write_parquet(
+        out = write_parquet(
             adjusted,
             f"{args.out}/supporting-facilities_adjusted.parquet",
             partition_by=["year"],
         )
-    print(f"clean rows: {clean_indexed.count()}  adjusted rows: {adjusted.count()}")
+    # count what was written: adjusted.count() would re-run the adjust DAG
+    print(f"clean rows: {clean_indexed.count()}  adjusted rows: {_written_rows(out)}")
+
+
+def _written_rows(path: str) -> int:
+    """Data rows of a writer's output: a single headered CSV file, or a
+    parquet directory (summed footer row counts, no Spark job)."""
+    if os.path.isdir(path):
+        import pyarrow.parquet as pq
+
+        parts = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+        return sum(pq.read_metadata(p).num_rows for p in parts)
+    with open(path, newline="") as fh:
+        return sum(1 for _ in csv.reader(fh)) - 1
 
 
 def curate(args: argparse.Namespace) -> None:
@@ -104,13 +120,10 @@ def curate(args: argparse.Namespace) -> None:
     spark = get_spark("curate")
     fmt = args.format
     if fmt == "auto":
-        import glob as _glob
-        import os as _os
-
         if args.input.endswith((".jsonl", ".json", ".jsonl.gz", ".json.gz")):
             fmt = "jsonl"
-        elif _os.path.isdir(args.input) and _glob.glob(
-            _os.path.join(args.input, "**", "*.json*"), recursive=True
+        elif os.path.isdir(args.input) and glob.glob(
+            os.path.join(args.input, "**", "*.json*"), recursive=True
         ):
             fmt = "jsonl"  # e.g. a previous run's kept/ shard directory
         else:

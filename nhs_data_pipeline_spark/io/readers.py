@@ -6,17 +6,22 @@ tokens (SURVEY §1.3, §2.1). That edge is inherently driver-side — the
 files are KB-to-MB sized and positional (row order matters), which a
 distributed shuffle would destroy. The engine therefore:
 
-- reads each raw file on the driver with pandas (Arrow-backed transfer
-  into Spark), attaching a stable ``_row_idx`` (per-file row position)
-  and ``_source_file`` before anything else;
+- reads each raw file on the driver with pandas, attaching a stable
+  ``_row_idx`` (per-file row position) and ``_source_file`` before
+  anything else;
 - runs header detection / promotion *before* creating the DataFrame, so
   downstream Spark code sees a canonical, statically-typed schema;
 - converts sentinel tokens to real NULLs at this edge only.
 
+Each reader is two steps: a pandas step (``read_messy_csv_pandas``)
+that does all of the above, and a Spark step (``pandas_to_spark``) that
+ships the frame as one Arrow-backed local relation. Callers that ingest
+many files (``pipelines.runner.run_series``) concatenate the pandas
+frames and call the Spark step once, so the plan has one local leaf
+instead of a union of one per file.
+
 The 100 TB path never touches this code — canonical storage is parquet
-read natively by Spark with full predicate pushdown. For *large* CSVs,
-``read_messy_csv`` falls back to distributed ``spark.read.csv`` when the
-file has no preamble.
+read natively by Spark with full predicate pushdown.
 
 Parity citations (into /root/reference/):
 - header-in-data detection: scripts/build_datasets_main.py:105-113;
@@ -34,6 +39,7 @@ from typing import Sequence
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from nhs_data_pipeline_spark.functions import (
     NA_TOKENS,
@@ -81,6 +87,49 @@ def _promote_header(pdf: pd.DataFrame, header_row: int) -> pd.DataFrame:
     return out
 
 
+def _apply_header(pdf: pd.DataFrame, header: str | int | None, marker: str | None) -> pd.DataFrame:
+    """``header='detect'`` | in-data row int | None (headerless)."""
+    if header == "detect":
+        return _promote_header(pdf, detect_header_row(pdf, marker=marker))
+    if isinstance(header, int):
+        return _promote_header(pdf, header)
+    return pdf
+
+
+def _clean_cells(pdf: pd.DataFrame, source: str, na_tokens: Sequence[str]) -> pd.DataFrame:
+    """Sentinels and missing cells -> None, everything else -> str, in
+    one pass; then ``_row_idx`` (per-file position) and ``_source_file``
+    lead the columns."""
+    toks = {str(t).strip() for t in na_tokens}
+    pdf = pdf.reset_index(drop=True).astype("object").map(
+        lambda v: None
+        if v is None or (isinstance(v, float) and pd.isna(v)) or str(v).strip() in toks
+        else str(v)
+    )
+    pdf.insert(0, "_row_idx", range(len(pdf)))
+    pdf.insert(1, "_source_file", source)
+    return pdf
+
+
+def pandas_to_spark(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
+    """The Spark step of every messy reader: one Arrow-backed
+    ``createDataFrame`` of a ``_clean_cells`` frame (or a concatenation
+    of them) into a local relation.
+
+    The schema is explicit: inference crashes on ZERO data rows
+    (CANNOT_INFER_EMPTY_SCHEMA — a just-published empty release is a
+    real shape) and on all-NULL columns. ``_row_idx`` is a long; every
+    other column is a string by the module contract (downstream schema
+    mapping casts)."""
+    schema = T.StructType(
+        [
+            T.StructField(str(c), T.LongType() if c == "_row_idx" else T.StringType())
+            for c in pdf.columns
+        ]
+    )
+    return spark.createDataFrame(pdf, schema=schema)
+
+
 def _finalize(
     spark: SparkSession,
     pdf: pd.DataFrame,
@@ -88,33 +137,8 @@ def _finalize(
     na_tokens: Sequence[str],
 ) -> DataFrame:
     """Sentinels -> NULL, attach ``_row_idx`` / ``_source_file``, ship to
-    Spark as all-string (downstream schema mapping casts)."""
-    pdf = pdf.reset_index(drop=True)
-    pdf = pdf.astype("object")
-    toks = {str(t).strip() for t in na_tokens}
-    pdf = pdf.map(
-        lambda v: None
-        if v is None or (isinstance(v, float) and pd.isna(v)) or str(v).strip() in toks
-        else str(v)
-    )
-    pdf.insert(0, "_row_idx", range(len(pdf)))
-    pdf.insert(1, "_source_file", source)
-    # Explicit all-string schema: inference crashes on ZERO data rows
-    # (CANNOT_INFER_EMPTY_SCHEMA — a just-published empty release is a
-    # real shape) and on all-NULL columns without Arrow. _row_idx is
-    # cast below, everything else is string by the module contract.
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [T.StructField(str(c), T.StringType()) for c in pdf.columns]
-    )
-    sdf = spark.createDataFrame(
-        pdf.astype({"_row_idx": "object"}).map(
-            lambda v: None if v is None else str(v)
-        ),
-        schema=schema,
-    )
-    return sdf.withColumn("_row_idx", F.col("_row_idx").cast("long"))
+    Spark (the two steps of every single-file reader)."""
+    return pandas_to_spark(spark, _clean_cells(pdf, source, na_tokens))
 
 
 def file_matches_skip_predicate(
@@ -129,6 +153,27 @@ def file_matches_skip_predicate(
         str(v).lower() for v in head.to_numpy().ravel() if pd.notna(v)
     )
     return any(m.lower() in blob for m in skip_markers)
+
+
+def read_messy_csv_pandas(
+    path: str,
+    skip: int = 0,
+    header: str | int | None = "detect",
+    marker: str | None = None,
+    na_tokens: Sequence[str] = NA_TOKENS,
+    skip_markers: Sequence[str] = (),
+) -> pd.DataFrame | None:
+    """The pandas step of ``read_messy_csv``: the cleaned frame
+    (``_row_idx``, ``_source_file``, then string cells), or None when
+    a ``skip_markers`` predicate matches."""
+    # only truly empty cells are missing here; sentinels are the
+    # caller's na_tokens, applied after header promotion
+    pdf = pd.read_csv(
+        path, header=None, dtype=str, skiprows=skip, keep_default_na=False, na_values=[""]
+    )
+    if skip_markers and file_matches_skip_predicate(pdf, skip_markers):
+        return None
+    return _clean_cells(_apply_header(pdf, header, marker), path, na_tokens)
 
 
 def read_messy_csv(
@@ -146,16 +191,8 @@ def read_messy_csv(
     Returns None when a ``skip_markers`` file-level predicate matches
     (P12: the whole release is excluded).
     """
-    pdf = pd.read_csv(path, header=None, dtype=str, skiprows=skip, keep_default_na=False)
-    pdf = pdf.replace({"": None})
-    if skip_markers and file_matches_skip_predicate(pdf, skip_markers):
-        return None
-    if header == "detect":
-        hr = detect_header_row(pdf, marker=marker)
-        pdf = _promote_header(pdf, hr)
-    elif isinstance(header, int):
-        pdf = _promote_header(pdf, header)
-    return _finalize(spark, pdf, path, na_tokens)
+    pdf = read_messy_csv_pandas(path, skip, header, marker, na_tokens, skip_markers)
+    return None if pdf is None else pandas_to_spark(spark, pdf)
 
 
 # ---------------------------------------------------------------------------
@@ -330,11 +367,7 @@ def read_messy_excel(
         if not matches:
             raise ValueError(f"no sheet matches {sheet_regex!r} in {path}")
         sheet = matches[0]
-    pdf = _excel_raw_frame(path, sheet, skip)
-    if header == "detect":
-        pdf = _promote_header(pdf, detect_header_row(pdf, marker=marker))
-    elif isinstance(header, int):
-        pdf = _promote_header(pdf, header)
+    pdf = _apply_header(_excel_raw_frame(path, sheet, skip), header, marker)
     return _finalize(spark, pdf, path, na_tokens)
 
 
@@ -367,14 +400,20 @@ def read_messy_excel_multi(
     return union_by_name(parts)
 
 
+# the columns with_filename_metadata appends, in order, and their extractors
+FILENAME_METADATA = {
+    "file_year": extract_year,
+    "file_quarter": extract_quarter,
+    "file_pathway": extract_pathway,
+}
+
+
 def with_filename_metadata(df: DataFrame, col: str = "_source_file") -> DataFrame:
     """Derive (year, quarter, pathway) columns from the source filename
     (S8 — scripts/build_datasets_main.py:62-92) as native regexes; works
     equally on ``F.input_file_name()`` for distributed reads."""
     src = F.col(col)
-    return (
-        df.withColumn("file_year", extract_year(src))
-        .withColumn("file_quarter", extract_quarter(src))
-        .withColumn("file_pathway", extract_pathway(src))
-    )
+    for name, extract in FILENAME_METADATA.items():
+        df = df.withColumn(name, extract(src))
+    return df
 

@@ -17,6 +17,7 @@ Semantics, in the reference's order:
     (``max(period)`` per final_code — the oracle and golden replay pin
     exactly this; the supporting-facilities pipeline separately rolls
     its quarterly dates forward, see pipelines/supporting_facilities).
+    Computed after step 7 in the per-org window of step 10.
 6.  Recode ``org_code := coalesce(final_code, org_code)``.
 7.  Re-aggregate the synthetic merged trust: group-by panel keys with
     NA-preserving sums (Spark ``sum`` is already NULL-on-all-NULL).
@@ -27,8 +28,9 @@ Semantics, in the reference's order:
     ``exp_unproblematic_org_change`` flags.
 
 The whole transformer is one lazy DAG: the only shuffles are the re-
-aggregation group-by and the final union's downstream consumer; lookup
-joins are broadcast.
+aggregation group-by, the name snapshot and the one per-org window that
+yields both ``change_period`` and ``exp_unproblematic_org_change``;
+lookup joins are broadcast.
 """
 
 from __future__ import annotations
@@ -105,13 +107,6 @@ def adjust_org_changes(
     )
     flagged = joined.withColumn("exp_problematic_org_change", problematic_flag)
 
-    # 5. change indicator: last period each adjusted old code reports.
-    change_dates = (
-        flagged.filter(adjustable)
-        .groupBy("final_code")
-        .agg(F.max(period_col).alias("change_period"))
-    )
-
     # 6. recode + mark.
     recoded = flagged.withColumn(
         "unproblematic_org_change", F.when(adjustable, 1).otherwise(0)
@@ -133,18 +128,16 @@ def adjust_org_changes(
     # 10. re-attach names and change metadata.
     if names is not None:
         out = natural_join(out, names, how="left", broadcast_right=True)
-    out = out.join(
-        F.broadcast(change_dates),
-        out[org_col] == change_dates["final_code"],
-        "left",
-    ).drop("final_code")
-    out = grouped_any_flag(
-        out,
-        [org_col],
-        F.col("unproblematic_org_change") == 1,
-        "exp_unproblematic_org_change",
+    # 5. change indicator: the last period the adjusted old codes report.
+    # Adjusted rows carry org := final_code and period is a key, so this
+    # is the max period of each org's adjusted groups — computed in the
+    # same org window as the group flag, with no aggregate + join.
+    adjusted_group = F.col("unproblematic_org_change") == 1
+    out = out.withColumn(
+        "change_period",
+        F.max(F.when(adjusted_group, F.col(period_col))).over(Window.partitionBy(org_col)),
     )
-    return out
+    return grouped_any_flag(out, [org_col], adjusted_group, "exp_unproblematic_org_change")
 
 
 def split_affected(

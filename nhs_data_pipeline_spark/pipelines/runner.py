@@ -19,16 +19,18 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Sequence
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nhs_data_pipeline_spark.functions import to_numeric
-from nhs_data_pipeline_spark.io.readers import read_messy_csv, with_filename_metadata
-from nhs_data_pipeline_spark.ops.core import (
-    coalesce_columns,
-    rename_columns,
-    union_by_name,
+from nhs_data_pipeline_spark.io.readers import (
+    FILENAME_METADATA,
+    pandas_to_spark,
+    read_messy_csv_pandas,
+    with_filename_metadata,
 )
+from nhs_data_pipeline_spark.ops.core import coalesce_columns
 from nhs_data_pipeline_spark.orgchange.adjust import adjust_org_changes
 
 
@@ -57,23 +59,37 @@ def run_series(spark: SparkSession, cfg: SeriesConfig) -> DataFrame:
     union -> clean -> (optional) org-change adjust. Returns the final
     panel as one lazy DataFrame (sinks are the caller's choice).
 
-    Per-file work is driver-side only through header detection (small
-    raw files, SURVEY §4); everything after ``union_by_name`` is a
-    single distributed plan.
+    Per-file work is pandas on the driver (small raw files, SURVEY §4):
+    messy ingest and the ``cfg.rename`` of each file, then one
+    ``pd.concat`` whose NULL fill and column order are
+    ``union_by_name``'s, and one ``createDataFrame``. The panel plan
+    has one local leaf, not a union of one per file, and Catalyst folds
+    the projections and filters below into it. The filename metadata
+    columns are derived after the rename, so ``cfg.rename`` does not
+    apply to them.
     """
-    frames = []
+    frames, columns = [], {}
     for path in cfg.files:
-        df = read_messy_csv(
-            spark, path, skip=cfg.skip, marker=cfg.marker, skip_markers=cfg.skip_markers
+        pdf = read_messy_csv_pandas(
+            path, skip=cfg.skip, marker=cfg.marker, skip_markers=cfg.skip_markers
         )
-        if df is None:  # P12: whole-file exclusion predicate matched
+        if pdf is None:  # P12: whole-file exclusion predicate matched
             continue
-        df = with_filename_metadata(df)
-        df = rename_columns(df, cfg.rename)
-        frames.append(df)
+        names = [cfg.rename.get(c, c) for c in pdf.columns]
+        dupes = sorted({n for n in names if names.count(n) > 1})
+        if dupes:
+            raise ValueError(
+                f"series {cfg.name}: renaming the columns of {path} gives"
+                f" duplicate names {dupes}"
+            )
+        pdf.columns = names
+        frames.append(pdf)
+        # union_by_name order: first appearance, metadata after each file's own columns
+        columns.update(dict.fromkeys(names + list(FILENAME_METADATA)))
     if not frames:
         raise ValueError(f"series {cfg.name}: every input file was skipped")
-    panel = union_by_name(frames)
+    panel = pandas_to_spark(spark, pd.concat(frames, ignore_index=True, sort=False))
+    panel = with_filename_metadata(panel).select(*columns)
     panel = coalesce_columns(panel, cfg.coalesce)
     for c in cfg.require_cols:
         panel = panel.filter(F.col(c).isNotNull())

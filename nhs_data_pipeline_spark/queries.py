@@ -364,8 +364,9 @@ def j1_natural_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j3_transitive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 — iterative successor closure (driver loop of broadcast
-    self-joins; no recursive CTE in Spark). Synthetic chain edges
+    """J3 — iterative successor closure (no recursive CTE in Spark: the
+    edges are collected once and the frontier loop runs on the driver,
+    returning a local relation). Synthetic chain edges
     N5->N0, ..., N24->N19 resolve in up to 4 hops."""
     n = _t(spark, sf_dir, "nation").filter(F.col("n_nationkey") >= 5)
     edges = n.select(

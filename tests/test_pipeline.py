@@ -101,6 +101,57 @@ def test_pipeline_without_adjustment(spark, tmp_path):
     assert got == {"OLD1": 4.0, "NEW": 10.0}
 
 
+ERA_RENAME = {"orgid": "org_code", "name": "org_name",
+              "organisation_code": "org_code_b", "organisation_name": "org_name_b",
+              "number_of_operating_theatres": "nr_operating_theatres"}
+
+
+def test_run_series_ingest_matches_per_file_reference(spark, tmp_path):
+    """One pandas concat + one createDataFrame gives what the public
+    per-file path gives: read_messy_csv -> with_filename_metadata ->
+    rename_columns -> union_by_name — rows, column order and types, and
+    each file's own _row_idx / _source_file."""
+    from nhs_data_pipeline_spark.io.readers import read_messy_csv, with_filename_metadata
+    from nhs_data_pipeline_spark.ops.core import rename_columns, union_by_name
+
+    (tmp_path / "again").mkdir()
+    files = [_era_a(tmp_path), _era_b(tmp_path), _era_a(tmp_path / "again")]
+    got = run_series(spark, SeriesConfig(
+        name="ingest", files=files, marker="Operating Theatres", rename=ERA_RENAME,
+    ))
+    ref = union_by_name([
+        rename_columns(
+            with_filename_metadata(read_messy_csv(spark, p, marker="Operating Theatres")),
+            ERA_RENAME,
+        )
+        for p in files
+    ])
+    assert got.columns == ref.columns
+    assert got.dtypes == ref.dtypes
+    key = lambda r: (r._source_file, r._row_idx)  # noqa: E731
+    assert sorted(got.collect(), key=key) == sorted(ref.collect(), key=key)
+    idx = {(r._source_file, r._row_idx) for r in got.collect()}
+    assert idx == {(f, i) for f in files for i in range(3)}
+
+
+def test_run_series_all_files_skipped_raises(spark, tmp_path):
+    cfg = SeriesConfig(
+        name="skipped", files=[_era_a(tmp_path), _era_b(tmp_path)],
+        marker="Operating Theatres", skip_markers=["supporting facilities release"],
+    )
+    with pytest.raises(ValueError, match="every input file was skipped"):
+        run_series(spark, cfg)
+
+
+def test_run_series_rename_to_duplicate_names_raises(spark, tmp_path):
+    cfg = SeriesConfig(
+        name="dupes", files=[_era_a(tmp_path)], marker="Operating Theatres",
+        rename={"orgid": "org_code", "sha": "org_code"},
+    )
+    with pytest.raises(ValueError, match=r"duplicate names \['org_code'\]"):
+        run_series(spark, cfg)
+
+
 def test_harmonize_wait_bins(spark):
     from nhs_data_pipeline_spark.pipelines.wait_times import harmonize_wait_bins
 

@@ -16,12 +16,15 @@ from nhs_data_pipeline_spark.queries import QUERIES
 SF = "/root/testdata/sf0.001"
 
 
-def plan_of(spark, name: str, mode: str = "formatted") -> str:
-    df = QUERIES[name](spark, SF)
+def _explain(df, mode: str = "simple") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain(mode)
     return buf.getvalue()
+
+
+def plan_of(spark, name: str, mode: str = "formatted") -> str:
+    return _explain(QUERIES[name](spark, SF), mode)
 
 
 @pytest.mark.parametrize("q", ["q3_shipping_priority", "q5_local_supplier_volume",
@@ -32,6 +35,45 @@ def test_no_sort_merge_joins_in_headline_suite(spark, q):
     p = plan_of(spark, q)
     assert "SortMergeJoin" not in p, f"{q} regressed to a shuffle join:\n{p[:2000]}"
     assert "BroadcastHashJoin" in p
+
+
+def test_j3_closure_is_a_local_relation(spark):
+    """The driver-side closure comes back as an Arrow-backed local
+    relation, not a ``Scan ExistingRDD`` Catalyst cannot fold."""
+    p = plan_of(spark, "j3_transitive_closure")
+    assert "Scan ExistingRDD" not in p, p[:2000]
+    assert "LocalTableScan" in p, p[:2000]
+
+
+def test_run_series_plan_is_one_local_leaf(spark, tmp_path):
+    """Many releases ingest as one local relation: no Union of per-file
+    leaves, and the rename / coalesce / filters / numeric casts fold
+    into the one leaf."""
+    import csv
+
+    from nhs_data_pipeline_spark.pipelines import SeriesConfig, run_series
+
+    files = []
+    for i, header in enumerate([["OrgID", "Name", "Beds"],
+                                ["Organisation Code", "Organisation Name", "Beds"]]):
+        path = tmp_path / f"Beds_Quarter_{i + 1}_2015_16.csv"
+        with open(path, "w", newline="") as f:
+            csv.writer(f).writerows(
+                [["Quarterly release", "", ""], header, ["RX1", "ONE", "4"], ["RX2", "TWO", "-"]]
+            )
+        files.append(str(path))
+    panel = run_series(spark, SeriesConfig(
+        name="beds", files=files * 3, marker="Beds",
+        rename={"orgid": "org_code", "name": "org_name"},
+        coalesce={"org_code": ["org_code", "organisation_code"],
+                  "org_name": ["org_name", "organisation_name"]},
+        numeric_cols=["beds"], require_cols=["org_code"], drop_name_values=["TWO"],
+    ))
+    p = _explain(panel)
+    assert "Union" not in p, p
+    assert p.count("LocalTableScan") == 1, p
+    assert "Scan ExistingRDD" not in p, p
+    assert panel.count() == 6
 
 
 def test_q1_pushdown_and_pruning(spark):
