@@ -185,10 +185,16 @@ def extract_quarter(c: Column | str) -> Column:
 
 def extract_pathway(c: Column | str) -> Column:
     """RTT pathway from filename: admitted | non_admitted | incomplete
-    (build_datasets_wait_times.R:48-51)."""
-    p = F.lower(F.regexp_extract(_col(c), PATHWAY_PATTERN, 1))
-    return F.when(p == "", None).otherwise(
-        F.regexp_replace(F.regexp_replace(p, r"[-_ ]", "_"), "^nonadmitted$", "non_admitted")
+    (build_datasets_wait_times.R:48-51); NULL if absent.
+
+    The match is mapped by case-insensitive regex branches, not by
+    ``lower``: a case-mapping call sets up ICU on first use, which costs
+    more than a whole cold panel build's data work."""
+    p = F.regexp_extract(_col(c), PATHWAY_PATTERN, 1)
+    return (
+        F.when(p.rlike("(?i)^non"), "non_admitted")
+        .when(p.rlike("(?i)^admitted$"), "admitted")
+        .when(p != "", "incomplete")
     )
 
 

@@ -411,8 +411,12 @@ FILENAME_METADATA = {
 def with_filename_metadata(df: DataFrame, col: str = "_source_file") -> DataFrame:
     """Derive (year, quarter, pathway) columns from the source filename
     (S8 — scripts/build_datasets_main.py:62-92) as native regexes; works
-    equally on ``F.input_file_name()`` for distributed reads."""
-    src = F.col(col)
+    equally on ``F.input_file_name()`` for distributed reads.
+
+    The extractors see only the last path segment, so a directory such
+    as ``nhs2019/Q4_admitted/`` does not stamp its year, quarter or
+    pathway on every file below it."""
+    src = F.regexp_extract(F.col(col), r"([^/\\]*)$", 1)
     for name, extract in FILENAME_METADATA.items():
         df = df.withColumn(name, extract(src))
     return df

@@ -27,10 +27,15 @@ Semantics, in the reference's order:
 10. Re-attach names; derive ``unproblematic_org_change`` /
     ``exp_unproblematic_org_change`` flags.
 
-The whole transformer is one lazy DAG: the only shuffles are the re-
-aggregation group-by, the name snapshot and the one per-org window that
-yields both ``change_period`` and ``exp_unproblematic_org_change``;
-lookup joins are broadcast.
+The transformer is one DAG: the only shuffles are the re-aggregation
+group-by, the name snapshot and the one per-org window that yields both
+``change_period`` and ``exp_unproblematic_org_change``; lookup joins
+are broadcast. When both inputs are driver-resident (every leaf of
+their analyzed plans is a ``LocalRelation``), the DAG runs once, inside
+the call, and comes back as one Arrow-backed local relation: the output
+is panel-sized, and the panel is already on the driver, so every later
+sink reads that relation instead of re-running the DAG. Any other
+input (e.g. parquet-backed) gets the lazy DAG.
 """
 
 from __future__ import annotations
@@ -137,7 +142,19 @@ def adjust_org_changes(
         "change_period",
         F.max(F.when(adjusted_group, F.col(period_col))).over(Window.partitionBy(org_col)),
     )
-    return grouped_any_flag(out, [org_col], adjusted_group, "exp_unproblematic_org_change")
+    out = grouped_any_flag(out, [org_col], adjusted_group, "exp_unproblematic_org_change")
+    if _driver_resident(df) and _driver_resident(lookup):
+        return out.sparkSession.createDataFrame(out.toArrow(), schema=out.schema)
+    return out
+
+
+def _driver_resident(df: DataFrame) -> bool:
+    """True when every leaf of ``df``'s analyzed plan is a ``LocalRelation``."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return all(
+        leaves.apply(i).getClass().getSimpleName() == "LocalRelation"
+        for i in range(leaves.size())
+    )
 
 
 def split_affected(

@@ -27,3 +27,15 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def local_frame(spark, rows, ddl: str, local: bool):
+    """``rows`` as an Arrow-backed local relation (``local``, so
+    ``isLocal()`` is true) or as a ``Scan ExistingRDD`` frame, which is
+    not driver-resident."""
+    if not local:
+        return spark.createDataFrame(rows, ddl)
+    import pandas as pd
+
+    names = [f.split()[0] for f in ddl.split(", ")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names, dtype=object), ddl)

@@ -86,6 +86,24 @@ def test_filename_metadata_extractors(spark):
     assert _one(spark, nf.extract_pathway(F.col("v")), fname) == "admitted"
     assert _one(spark, nf.extract_pathway(F.col("v")), "RTT_nonadmitted_Mar13.xls") == "non_admitted"
     assert _one(spark, nf.extract_year(F.col("v")), "no_year_here.csv") is None
+    # pathway spellings, pinned to the outputs of the earlier lower()-based
+    # extractor (the mapping is now case-insensitive regex branches)
+    pathways = {
+        "RTT_admitted_Mar13.xls": "admitted",
+        "Admitted.csv": "admitted",
+        "nonadmitted": "non_admitted",
+        "RTT-non-admitted-2014.csv": "non_admitted",
+        "Non_Admitted_Q1": "non_admitted",
+        "NON ADMITTED": "non_admitted",
+        "INCOMPLETE pathways": "incomplete",
+        "readmitted": "admitted",
+        "Beds_Quarter_3_2015_16.csv": None,
+        "": None,
+        None: None,
+    }
+    df = spark.createDataFrame([(v,) for v in pathways], "v string")
+    got = {r.v: r.p for r in df.select("v", nf.extract_pathway("v").alias("p")).collect()}
+    assert got == pathways
 
 
 def test_bin_lower_bound(spark):

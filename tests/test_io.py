@@ -5,8 +5,10 @@ from __future__ import annotations
 
 import csv
 import os
+import re
 
 import pytest
+from conftest import local_frame
 
 from nhs_data_pipeline_spark.io import (
     detect_header_row,
@@ -291,6 +293,198 @@ def test_filename_metadata_distributed_path(spark, tmp_path):
     out = with_filename_metadata(df)
     rows = out.collect()
     assert all(r.file_year == 2015 and r.file_quarter == "Q3" for r in rows)
+
+
+def test_filename_metadata_ignores_directory_names(spark, tmp_path):
+    """A directory named like a release (nhs2019/Q4_admitted/) must not
+    stamp its year, quarter or pathway on the files below it, on the
+    driver-side ``_source_file`` path and on ``input_file_name()`` URIs."""
+    from pyspark.sql import functions as F
+
+    d = tmp_path / "nhs2019" / "Q4_admitted"
+    d.mkdir(parents=True)
+    named = _write_messy(d, "Theatres_Quarter_2_2013_14.csv")
+    rtt = _write_messy(d, "RTT_NonAdmitted_Quarter_1_2016.csv")
+    bare = _write_messy(d, "theatres.csv")
+    want = {
+        named: (2013, "Q2", None),
+        rtt: (2016, "Q1", "non_admitted"),
+        bare: (None, None, None),
+    }
+    for path, meta in want.items():
+        r = with_filename_metadata(read_messy_csv(spark, path)).first()
+        assert (r.file_year, r.file_quarter, r.file_pathway) == meta, path
+    df = (
+        spark.read.option("header", True).csv(str(d))
+        .withColumn("_source_file", F.input_file_name())
+    )
+    got = {
+        (r.file_year, r.file_quarter, r.file_pathway)
+        for r in with_filename_metadata(df).collect()
+    }
+    assert got == set(want.values())
+
+
+def _parquet_files(path):
+    return sorted(
+        os.path.relpath(os.path.join(d, n), path)
+        for d, _, names in os.walk(path) for n in names if n.endswith(".parquet")
+    )
+
+
+# string partition values with characters hive paths must escape, a
+# non-ASCII one and "" (which Spark writes as NULL), NULL partition
+# values, and a spread of column types
+_SINK_ROWS = [
+    (1, 2019, "a/b", 1.5, "2019-04-01", True, "1.25", "2019-04-01 10:30:00"),
+    (2, 2019, "c=d", None, "2019-07-01", False, "2.50", None),
+    (3, 2020, "e f", 3.0, None, None, None, "2020-01-01 00:00:00"),
+    (4, None, "g%h", 4.0, "2020-01-01", True, "4.00", "2020-01-01 00:00:00"),
+    (5, 2020, None, 5.0, "2020-04-01", False, "5.75", "2020-04-01 23:59:59"),
+    (6, 2021, "\u00e9", 6.0, "2021-01-01", True, "6.00", "2021-01-01 00:00:00"),
+    (7, 2021, "", 7.0, "2021-04-01", False, "7.00", None),
+]
+_SINK_DDL = (
+    "id long, year int, part string, v double, d date, b boolean, m decimal(10,2), ts timestamp"
+)
+
+
+def _sink_frame(spark, local):
+    import datetime
+    from decimal import Decimal
+
+    rows = [
+        (i, y, p, v, d and datetime.date.fromisoformat(d), b, m and Decimal(m),
+         ts and datetime.datetime.fromisoformat(ts))
+        for i, y, p, v, d, b, m, ts in _SINK_ROWS
+    ]
+    return local_frame(spark, rows, _SINK_DDL, local)
+
+
+_PYARROW_FILE = r"part-\d+\.parquet"
+_SPARK_FILE = r"part-\d{5}-.*\.parquet"
+
+
+@pytest.mark.parametrize("partition_by, local_file", [
+    (["year"], _PYARROW_FILE),
+    (["year", "d", "b"], _PYARROW_FILE),
+    (None, _PYARROW_FILE),
+    # pyarrow spells string and timestamp directory names differently
+    # from Spark, so these take Spark's writer
+    (["part"], _SPARK_FILE),
+    (["year", "part"], _SPARK_FILE),
+    (["ts"], _SPARK_FILE),
+])
+def test_write_parquet_pyarrow_sink_matches_spark_writer(spark, tmp_path, partition_by, local_file):
+    """A local result is written by pyarrow (``part-{i}.parquet`` files)
+    and a non-local one by Spark's writer; read back by Spark, both give
+    the same rows, columns and types, partition columns included."""
+    from nhs_data_pipeline_spark.io.writers import write_parquet
+
+    local, dist = _sink_frame(spark, True), _sink_frame(spark, False)
+    assert local.isLocal() and not dist.isLocal()
+    a, b = str(tmp_path / "local"), str(tmp_path / "spark")
+    write_parquet(local, a, partition_by=partition_by)
+    write_parquet(dist, b, partition_by=partition_by)
+    assert all(re.fullmatch(local_file, os.path.basename(f)) for f in _parquet_files(a))
+    assert all(re.fullmatch(_SPARK_FILE, os.path.basename(f)) for f in _parquet_files(b))
+    ra, rb = spark.read.parquet(a), spark.read.parquet(b)
+    assert ra.dtypes == rb.dtypes
+    assert sorted(ra.collect()) == sorted(rb.collect())
+    # Spark reads a "" partition value back as NULL
+    blank = None if "part" in (partition_by or ()) else ""
+    assert sorted(ra.select("id", "part").collect()) == sorted(
+        (r[0], blank if r[2] == "" else r[2]) for r in _SINK_ROWS
+    )
+    assert sorted(os.listdir(tmp_path)) == ["local", "spark"]
+
+
+def test_write_parquet_append_and_nonlocal_go_through_spark(spark, tmp_path):
+    from nhs_data_pipeline_spark.io.writers import write_parquet
+
+    out = str(tmp_path / "out")
+    write_parquet(_sink_frame(spark, False), out, partition_by=["year"])
+    write_parquet(_sink_frame(spark, True), out, partition_by=["year"], mode="append")
+    files = _parquet_files(out)
+    assert len(files) >= 2
+    assert all(re.fullmatch(_SPARK_FILE, os.path.basename(f)) for f in files)
+    assert spark.read.parquet(out).count() == 2 * len(_SINK_ROWS)
+
+
+def test_write_parquet_empty_local_result_keeps_schema(spark, tmp_path):
+    from nhs_data_pipeline_spark.io.writers import write_parquet
+
+    empty = _sink_frame(spark, True).limit(0)
+    empty = spark.createDataFrame(empty.toArrow(), schema=empty.schema)
+    assert empty.isLocal()
+    out = str(tmp_path / "empty")
+    write_parquet(empty, out)
+    back = spark.read.parquet(out)
+    assert back.count() == 0 and back.dtypes == empty.dtypes
+
+
+def _failing_frame(spark):
+    """Non-local, and fails only when evaluated."""
+    from pyspark.sql import functions as F
+
+    return spark.range(3).select(F.expr("if(id >= 0, raise_error('boom'), id)").alias("id"))
+
+
+def test_failed_writes_keep_previous_output(spark, tmp_path):
+    """A write whose evaluation fails leaves the previous output readable
+    and unchanged, and leaves no temporary directory behind."""
+    from nhs_data_pipeline_spark.io.writers import write_parquet
+
+    pq_out, csv_out = str(tmp_path / "out.parquet"), str(tmp_path / "out.csv")
+    good = spark.createDataFrame([(1,), (2,)], "id long")
+    write_parquet(good, pq_out)
+    write_single_csv(good, csv_out, order_by=["id"])
+    with open(csv_out) as f:
+        csv_before = f.read()
+    with pytest.raises(Exception, match="boom"):
+        write_parquet(_failing_frame(spark), pq_out)
+    with pytest.raises(Exception, match="boom"):
+        write_single_csv(_failing_frame(spark), csv_out)
+    assert sorted(r.id for r in spark.read.parquet(pq_out).collect()) == [1, 2]
+    with open(csv_out) as f:
+        assert f.read() == csv_before
+    assert sorted(os.listdir(tmp_path)) == ["out.csv", "out.parquet"]
+
+
+def test_failed_swap_restores_previous_output(spark, tmp_path, monkeypatch):
+    """If the rename that moves the new output into place fails, the
+    previous output is renamed back and no hidden sibling is left."""
+    from nhs_data_pipeline_spark.io import writers
+
+    out = str(tmp_path / "out.parquet")
+    writers.write_parquet(spark.createDataFrame([(1,), (2,)], "id long"), out)
+    rename = os.rename
+
+    def failing_rename(src, dst):
+        if os.path.basename(src).startswith(".out.parquet.tmp-"):
+            raise OSError("rename failed")
+        rename(src, dst)
+
+    monkeypatch.setattr(writers.os, "rename", failing_rename)
+    with pytest.raises(OSError, match="rename failed"):
+        writers.write_parquet(spark.createDataFrame([(3,)], "id long"), out)
+    monkeypatch.undo()
+    assert sorted(r.id for r in spark.read.parquet(out).collect()) == [1, 2]
+    assert os.listdir(tmp_path) == ["out.parquet"]
+
+
+def test_write_parquet_through_symlink_keeps_link(spark, tmp_path):
+    """An output path that is a symlink to a directory stays a link; the
+    new output replaces the directory it points at."""
+    from nhs_data_pipeline_spark.io.writers import write_parquet
+
+    target, link = tmp_path / "target", tmp_path / "link"
+    write_parquet(spark.createDataFrame([(1,)], "id long"), str(target))
+    link.symlink_to(target, target_is_directory=True)
+    write_parquet(spark.createDataFrame([(2,), (3,)], "id long"), str(link))
+    assert link.is_symlink() and os.readlink(link) == str(target)
+    assert sorted(r.id for r in spark.read.parquet(str(target)).collect()) == [2, 3]
+    assert sorted(os.listdir(tmp_path)) == ["link", "target"]
 
 
 def test_overwrite_partitions_is_incremental(spark, tmp_path):

@@ -11,6 +11,7 @@ from nhs_data_pipeline_spark.orgchange import (
 )
 from nhs_data_pipeline_spark.orgchange.adjust import split_affected
 import pytest
+from conftest import local_frame
 
 
 def _edges(spark, rows):
@@ -308,16 +309,22 @@ def _random_adjust_case(i):
     return panel, lookup
 
 
-def _adjust_rows(spark, panel, lookup):
-    out = adjust_org_changes(
-        spark.createDataFrame(panel, "org_code string, period int, org_name string, val double"),
-        spark.createDataFrame(
-            [(o, f, 0, p) for o, f, p in lookup],
+def _adjust(spark, panel, lookup, local=False, local_lookup=None):
+    return adjust_org_changes(
+        local_frame(
+            spark, panel, "org_code string, period int, org_name string, val double", local
+        ),
+        local_frame(
+            spark, [(o, f, 0, p) for o, f, p in lookup],
             "old_code string, final_code string, experiences_split int, problematic int",
+            local if local_lookup is None else local_lookup,
         ),
         keys=["org_code", "period"], sum_cols=["val"],
         org_col="org_code", period_col="period", name_col="org_name",
     )
+
+
+def _adjust_rows(out):
     assert out.columns == ADJUST_COLUMNS
     rows = [tuple(r) for r in out.collect()]
     got = {r[:2]: r[2:] for r in rows}
@@ -326,19 +333,37 @@ def _adjust_rows(spark, panel, lookup):
 
 
 def test_adjust_random_panels_match_python(spark):
+    """30 random cases in one run, adjusted twice: from driver-resident
+    inputs (the DAG runs inside the call and the result is a local
+    relation) and from non-local inputs (the lazy DAG). Both paths give
+    the Python expectation, with the same rows and schema."""
     panel, lookup = [], []
     for i in range(30):
         p, lk = _random_adjust_case(i)
         panel += p
         lookup += lk
-    got = _adjust_rows(spark, panel, lookup)
     want = _adjust_expectation(panel, lookup)
-    assert got.keys() == want.keys()
-    bad = {k: (got[k], want[k]) for k in want if got[k] != want[k]}
-    assert not bad, dict(list(bad.items())[:5])
+    results = {}
+    for local in (True, False):
+        out = _adjust(spark, panel, lookup, local)
+        assert out.isLocal() is local
+        got = _adjust_rows(out)
+        assert got.keys() == want.keys()
+        bad = {k: (got[k], want[k]) for k in want if got[k] != want[k]}
+        assert not bad, dict(list(bad.items())[:5])
+        results[local] = (out.schema, got)
+    assert results[True] == results[False]
     # the cases do exercise the change columns
     assert any(v[4] is not None for v in want.values())
     assert any(v[5] == 1 and v[2] == 0 for v in want.values())
+
+
+def test_adjust_mixed_inputs_stay_lazy(spark):
+    """One non-local input is enough to keep the adjustment lazy."""
+    panel, lookup = _random_adjust_case(0)
+    out = _adjust(spark, panel, lookup, local=True, local_lookup=False)
+    assert not out.isLocal()
+    assert _adjust_rows(out) == _adjust_expectation(panel, lookup)
 
 
 def test_adjust_swap_cycle_keeps_original_code_names(spark):
@@ -348,7 +373,7 @@ def test_adjust_swap_cycle_keeps_original_code_names(spark):
     the re-aggregation would give NULL."""
     panel = [("C2", 2001, "MC2", 1.0), ("C4", 2001, None, 2.0), ("C4", 2002, None, 3.0)]
     lookup = [("C2", "C4", 0), ("C4", "C2", 0)]
-    got = _adjust_rows(spark, panel, lookup)
+    got = _adjust_rows(_adjust(spark, panel, lookup))
     assert got == {
         ("C2", 2001): (2.0, 0, 1, "MC2", 2002, 1),
         ("C2", 2002): (3.0, 0, 1, "MC2", 2002, 1),

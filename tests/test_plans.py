@@ -45,10 +45,9 @@ def test_j3_closure_is_a_local_relation(spark):
     assert "LocalTableScan" in p, p[:2000]
 
 
-def test_run_series_plan_is_one_local_leaf(spark, tmp_path):
-    """Many releases ingest as one local relation: no Union of per-file
-    leaves, and the rename / coalesce / filters / numeric casts fold
-    into the one leaf."""
+def _run_series_panel(spark, tmp_path):
+    """A ``run_series`` panel over 6 files of two header eras, with
+    rename, coalesce, filters and numeric casts."""
     import csv
 
     from nhs_data_pipeline_spark.pipelines import SeriesConfig, run_series
@@ -62,18 +61,34 @@ def test_run_series_plan_is_one_local_leaf(spark, tmp_path):
                 [["Quarterly release", "", ""], header, ["RX1", "ONE", "4"], ["RX2", "TWO", "-"]]
             )
         files.append(str(path))
-    panel = run_series(spark, SeriesConfig(
+    return run_series(spark, SeriesConfig(
         name="beds", files=files * 3, marker="Beds",
         rename={"orgid": "org_code", "name": "org_name"},
         coalesce={"org_code": ["org_code", "organisation_code"],
                   "org_name": ["org_name", "organisation_name"]},
         numeric_cols=["beds"], require_cols=["org_code"], drop_name_values=["TWO"],
     ))
+
+
+def test_run_series_plan_is_one_local_leaf(spark, tmp_path):
+    """Many releases ingest as one local relation: no Union of per-file
+    leaves, and the rename / coalesce / filters / numeric casts fold
+    into the one leaf."""
+    panel = _run_series_panel(spark, tmp_path)
     p = _explain(panel)
     assert "Union" not in p, p
     assert p.count("LocalTableScan") == 1, p
     assert "Scan ExistingRDD" not in p, p
     assert panel.count() == 6
+
+
+def test_run_series_plan_has_no_case_mapping(spark, tmp_path):
+    """No lower/upper/initcap in the panel plan: the first case-mapping
+    call of a JVM sets up ICU, which costs more than the cold build's
+    data work."""
+    p = _explain(_run_series_panel(spark, tmp_path), "extended")
+    for fn in ("lower(", "upper(", "initcap("):
+        assert fn not in p, p
 
 
 def test_q1_pushdown_and_pruning(spark):
